@@ -26,7 +26,7 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..common import scratch_path
@@ -92,9 +92,13 @@ def _write_data_files(
     df: DataFrame, table_dir: str, n_files: int
 ) -> tuple[list[str], int]:
     """Write df as uniquely-named parquet files under data/ (NOT yet
-    visible — visibility comes from the commit record)."""
+    visible — visibility comes from the commit record).  The returned
+    row count is observed on the staging write itself: the rows actually
+    written, with no second run of ``df``'s plan."""
     staging = scratch_path("sskos_txn_stage_")
-    df.repartition(n_files).write.mode("overwrite").parquet(staging)
+    obs = Observation()
+    observed = df.repartition(n_files).observe(obs, F.count(F.lit(1)).alias("n"))
+    observed.write.mode("overwrite").parquet(staging)
     data_dir = os.path.join(table_dir, "data")
     os.makedirs(data_dir, exist_ok=True)
     names = []
@@ -103,7 +107,7 @@ def _write_data_files(
             name = f"{uuid.uuid4().hex}.parquet"
             os.rename(os.path.join(staging, f), os.path.join(data_dir, name))
             names.append(name)
-    return names, df.count()
+    return names, obs.get["n"]
 
 
 @register("sink_txn_log")  # rows-only: commit-protocol runtime semantics

@@ -306,6 +306,83 @@ def test_offset_ledger_exactly_once_across_restart(spark, tmp_path):
     assert sorted(sink_ids) == sorted(src_ids), "sink lost/duplicated rows"
 
 
+def test_offset_ledger_batch_is_two_jobs(spark, tmp_path):
+    """Per-batch cost and content of ``OffsetLedger.process``: each batch
+    is exactly one sink write plus one ledger write (2 Spark jobs), the
+    ledger row equals count/min/max of the batch's sink partition, an
+    empty batch records ``0, null, null``, and the ledger files keep
+    LEDGER_SCHEMA's nullable fields."""
+    import os
+    import time
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sc = spark.sparkContext
+    stream_dir = stage_stream_dir(spark, SF_DIR, n_chunks=3)
+    ledger = OffsetLedger(str(tmp_path / "ledgered"))
+    group = f"ledger-jobs-{uuid.uuid4().hex[:8]}"
+
+    def process(df, batch_id):
+        sc.setJobGroup(f"{group}-{batch_id}", group)
+        if batch_id == 1:
+            df = df.where(F.col("event_id") < 0)
+        ledger.process(df, batch_id)
+
+    (
+        read_event_stream(spark, stream_dir, max_files_per_trigger=1)
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+    def jobs(batch_id):
+        return sc.statusTracker().getJobIdsForGroup(f"{group}-{batch_id}")
+
+    # Job-end events reach the status store asynchronously.
+    deadline = time.monotonic() + 10
+    while time.monotonic() < deadline and any(len(jobs(b)) < 2 for b in range(3)):
+        time.sleep(0.1)
+    assert [len(jobs(b)) for b in range(3)] == [2, 2, 2]
+
+    led = {r["batch_id"]: r for r in ledger.read_ledger(spark).collect()}
+    assert sorted(led) == [0, 1, 2]
+    for b, r in led.items():
+        sink = (
+            spark.read.parquet(os.path.join(ledger.sink_dir, f"batch_id={b}"))
+            .agg(F.count(F.lit(1)), F.min("event_id"), F.max("event_id"))
+            .first()
+        )
+        assert (r["n_rows"], r["min_event_id"], r["until_event_id"]) == tuple(sink)
+        assert (r["group"], r["source"]) == (ledger.group, ledger.source)
+    assert (led[1]["n_rows"], led[1]["min_event_id"], led[1]["until_event_id"]) == (
+        0,
+        None,
+        None,
+    )
+    assert led[0]["n_rows"] > 0 and led[2]["n_rows"] > 0
+
+    expected = pa.schema(
+        [("group", pa.string()), ("source", pa.string())]
+        + [
+            (name, pa.int64())
+            for name in ("batch_id", "n_rows", "min_event_id", "until_event_id")
+        ]
+    )
+    files = [
+        os.path.join(d, f)
+        for d, _, fs in os.walk(ledger.ledger_dir)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    assert len(files) == 3
+    for f in files:
+        assert pq.read_schema(f).remove_metadata().equals(expected), f
+
+
 def _committed_batches(spark, ledger: OffsetLedger) -> list[int]:
     try:
         return [
