@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterable
 
+from .audit import _simple, sweep, walk
+
 #: key → reviewed reason its SUM/AVG-over-double sites are acceptable.
 #: Reason classes: BOUNDED (≤k-term rollup frame, ROUND-absorbed ulps),
 #: EXACT (summands and partial sums exactly representable — order-free
@@ -130,39 +132,6 @@ COLLECT_ALLOWED: dict[str, str] = {
     "— sorted before the median element_at, ≤7-value frame",
 }
 
-SKIP_PREFIXES: tuple[str, ...] = (
-    "stream_",
-    "source_",
-    "sink_",
-    "udaf",
-    "multimodal",
-)
-
-
-def _simple(obj) -> str:
-    return obj.getClass().getSimpleName().rstrip("$")
-
-
-def _walk_plan(plan, acc: list) -> list:
-    acc.append(plan)
-    for i in range(plan.children().size()):
-        _walk_plan(plan.children().apply(i), acc)
-    try:
-        subs = plan.subqueries()
-        for i in range(subs.size()):
-            _walk_plan(subs.apply(i), acc)
-    except Exception:  # noqa: BLE001
-        pass
-    return acc
-
-
-def _walk_expr(e, acc: list) -> list:
-    acc.append(e)
-    for i in range(e.children().size()):
-        _walk_expr(e.children().apply(i), acc)
-    return acc
-
-
 def _classify_exprs(exprs, tag: str):
     """Yield hazard sites from a Seq of named expressions.
 
@@ -170,7 +139,7 @@ def _classify_exprs(exprs, tag: str):
     Window) so a reviewer can tell a grouped sum from a windowed one.
     """
     for i in range(exprs.size()):
-        for e in _walk_expr(exprs.apply(i), []):
+        for e in walk(exprs.apply(i), subqueries=False):
             name = _simple(e)
             if name in ("CollectList", "CollectSet"):
                 yield "collect", f"{tag}{name}"
@@ -195,7 +164,7 @@ def iter_sites(df):
     and must clear the same FLOAT_SUM_ALLOWED review.
     """
     opt = df._jdf.queryExecution().optimizedPlan()
-    for node in _walk_plan(opt, []):
+    for node in walk(opt):
         kind = _simple(node)
         if kind == "Aggregate":
             yield from _classify_exprs(node.aggregateExpressions(), "")
@@ -213,31 +182,17 @@ def audit_aggregates(
     """Sweep registered batch queries; return (key, detail) pairs with
     non-allowlisted float-sum or collect sites.  Empty == clean.
     ``frames`` shares one query-construction pass across sweeps (see
-    plans.audit.audit_plans)."""
-    from .registry import QUERIES, ordered_queries
+    plans.audit.sweep)."""
+    return sweep(spark, sf_dir, _check_sites, keys, report, frames)
 
-    say = report or (lambda _line: None)
-    qs = ordered_queries() if keys is None else {k: QUERIES[k] for k in keys}
-    unexplained: list[tuple[str, str]] = []
-    for key, fn in qs.items():
-        if key.startswith(SKIP_PREFIXES):
-            continue
-        try:
-            df = frames[key] if frames is not None else fn(spark, sf_dir)
-            if isinstance(df, Exception):
-                raise df
-            sites = list(iter_sites(df))
-        except Exception as e:  # noqa: BLE001 - audit reports, not dies
-            say(f"ERR   {key}: {type(e).__name__}: {e}")
-            unexplained.append((key, "ERR"))
-            continue
-        for kind, detail in sorted(set(sites)):
-            allow = (
-                FLOAT_SUM_ALLOWED if kind == "float_sum" else COLLECT_ALLOWED
-            )
-            if key in allow:
-                say(f"ok    {key}: {kind} {detail} allowed ({allow[key]})")
-            else:
-                say(f"FLAG  {key}: {kind} {detail}")
-                unexplained.append((key, f"{kind}:{detail}"))
-    return unexplained
+
+def _check_sites(key: str, df, say: Callable[[str], None]) -> list[str]:
+    flagged = []
+    for kind, detail in sorted(set(iter_sites(df))):
+        allow = FLOAT_SUM_ALLOWED if kind == "float_sum" else COLLECT_ALLOWED
+        if key in allow:
+            say(f"ok    {key}: {kind} {detail} allowed ({allow[key]})")
+        else:
+            say(f"FLAG  {key}: {kind} {detail}")
+            flagged.append(f"{kind}:{detail}")
+    return flagged

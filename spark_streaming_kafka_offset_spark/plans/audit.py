@@ -22,7 +22,7 @@ Flags:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable
+from collections.abc import Callable, Iterable, Iterator
 
 #: key → reviewed reason a BroadcastNestedLoopJoin is acceptable.  Every
 #: side is bounded: a 1-row scalar frame, a literal dim, or a model-sized
@@ -490,9 +490,10 @@ _ALLOW: dict[str, dict[str, str]] = {
     "PYUDF": PYUDF_ALLOWED,
 }
 
-#: prefixes excluded from the plan sweep: streaming/write entries execute
-#: rather than expose a comparable batch plan; pandas grouped-map and
-#: multimodal entries are Arrow exchanges by design.
+#: prefixes excluded from every registry sweep (this module's, and the
+#: window and aggregate audits'): streaming/write entries execute rather
+#: than expose a comparable batch plan; pandas grouped-map and multimodal
+#: entries are Arrow exchanges by design.
 SKIP_PREFIXES: tuple[str, ...] = ("stream_", "source_", "sink_", "udaf", "multimodal")
 
 
@@ -510,26 +511,52 @@ def plan_flags(plan: str) -> list[str]:
     return flags
 
 
-def audit_plans(
+def _simple(obj) -> str:
+    """Simple class name of a JVM Catalyst node (Scala ``$`` stripped)."""
+    return obj.getClass().getSimpleName().rstrip("$")
+
+
+def walk(node, subqueries: bool = True) -> Iterator:
+    """Pre-order walk of a JVM Catalyst tree.  With ``subqueries`` (logical
+    plans) it also enters the plans held by subquery expressions; pass
+    False for expression trees, which have none."""
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from walk(children.apply(i), subqueries)
+    if subqueries:
+        try:
+            subs = node.subqueries()
+        except Exception:  # noqa: BLE001 - node kinds without subqueries()
+            return
+        for i in range(subs.size()):
+            yield from walk(subs.apply(i), subqueries)
+
+
+def sweep(
     spark,
     sf_dir: str,
+    check: Callable[[str, object, Callable[[str], None]], list[str]],
     keys: Iterable[str] | None = None,
     report: Callable[[str], None] | None = None,
     frames: dict | None = None,
 ) -> list[tuple[str, str]]:
-    """Sweep every registered batch query's executed plan; return the
-    (key, flag) pairs NOT covered by the allowlists ("ERR" flag when the
-    plan could not be built).  Empty list == clean tree.
+    """Run ``check(key, df, report)`` over every registered batch query
+    (or ``keys``); it reports each finding and returns the details it
+    could not explain.  Return those as (key, detail) pairs, with an "ERR"
+    detail when the query could not be built or inspected.  Empty list ==
+    clean tree.  Audit order does not matter, so this walks ``QUERIES``
+    (registration order) and never reads the driver ledgers.
 
     ``frames`` (key → built DataFrame, or the Exception its build
     raised) lets several sweeps share ONE query-construction pass —
     building all 462 queries dominates each sweep's wall (iterative ops
     run their staging jobs at build time), so the pytest gates build
     once and run all audits over the same frames (r15, VERDICT r14 #2a)."""
-    from .registry import QUERIES, ordered_queries
+    from .registry import QUERIES
 
     say = report or (lambda _line: None)
-    qs = ordered_queries() if keys is None else {k: QUERIES[k] for k in keys}
+    qs = QUERIES if keys is None else {k: QUERIES[k] for k in keys}
     unexplained: list[tuple[str, str]] = []
     for key, fn in qs.items():
         if key.startswith(SKIP_PREFIXES):
@@ -538,16 +565,35 @@ def audit_plans(
             df = frames[key] if frames is not None else fn(spark, sf_dir)
             if isinstance(df, Exception):
                 raise df
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            details = check(key, df, say)
         except Exception as e:  # noqa: BLE001 - audit must report, not die
             say(f"ERR   {key}: {type(e).__name__}: {e}")
             unexplained.append((key, "ERR"))
             continue
-        for flag in plan_flags(plan):
-            reason = _ALLOW[flag].get(key)
-            if reason:
-                say(f"ok    {key}: {flag} allowed ({reason})")
-            else:
-                say(f"FLAG  {key}: {flag}")
-                unexplained.append((key, flag))
+        unexplained += [(key, d) for d in details]
     return unexplained
+
+
+def _check_plan(key: str, df, say: Callable[[str], None]) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    flagged = []
+    for flag in plan_flags(plan):
+        reason = _ALLOW[flag].get(key)
+        if reason:
+            say(f"ok    {key}: {flag} allowed ({reason})")
+        else:
+            say(f"FLAG  {key}: {flag}")
+            flagged.append(flag)
+    return flagged
+
+
+def audit_plans(
+    spark,
+    sf_dir: str,
+    keys: Iterable[str] | None = None,
+    report: Callable[[str], None] | None = None,
+    frames: dict | None = None,
+) -> list[tuple[str, str]]:
+    """Sweep every registered batch query's executed plan; return the
+    (key, flag) pairs NOT covered by the allowlists (see ``sweep``)."""
+    return sweep(spark, sf_dir, _check_plan, keys, report, frames)

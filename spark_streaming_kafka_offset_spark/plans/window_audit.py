@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterable
 
+from .audit import _simple, sweep, walk
+
 #: window functions whose OUTPUT differs when equal-order rows swap.
 TIE_SENSITIVE_FNS = {"RowNumber", "NTile", "Lag", "Lead", "NthValue"}
 
@@ -66,45 +68,6 @@ TOTAL_ORDER_ALLOWED: dict[str, str] = {
     "only (lower-median order statistic); tied rows are "
     "indistinguishable in the projected column",
 }
-
-#: prefixes excluded from the sweep (same rationale as plans/audit.py:
-#: streaming/write entries execute rather than expose a batch plan).
-SKIP_PREFIXES: tuple[str, ...] = (
-    "stream_",
-    "source_",
-    "sink_",
-    "udaf",
-    "multimodal",
-)
-
-
-def _simple(obj) -> str:
-    return obj.getClass().getSimpleName().rstrip("$")
-
-
-def _collect_windows(plan, acc: list) -> list:
-    """All Window nodes in ``plan``, including inside subqueries."""
-    if _simple(plan) == "Window":
-        acc.append(plan)
-    for i in range(plan.children().size()):
-        _collect_windows(plan.children().apply(i), acc)
-    try:  # subquery expressions hold their own plans
-        subs = plan.subqueries()
-        for i in range(subs.size()):
-            _collect_windows(subs.apply(i), acc)
-    except Exception:  # noqa: BLE001 - older/remote plans: no subqueries()
-        pass
-    return acc
-
-
-def _window_exprs(named_expr, acc: list) -> list:
-    """All WindowExpression nodes under one projected NamedExpression."""
-    if _simple(named_expr) == "WindowExpression":
-        acc.append(named_expr)
-    for i in range(named_expr.children().size()):
-        _window_exprs(named_expr.children().apply(i), acc)
-    return acc
-
 
 def _frame_is_whole_partition(frame) -> bool:
     if _simple(frame) != "SpecifiedWindowFrame":
@@ -157,7 +120,9 @@ def iter_sensitive_specs(df):
     (child, partition, order) text."""
     opt = df._jdf.queryExecution().optimizedPlan()
     seen: set[tuple[str, str, str]] = set()
-    for w in _collect_windows(opt, []):
+    for w in walk(opt):
+        if _simple(w) != "Window":
+            continue
         parts = [
             w.partitionSpec().apply(i)
             for i in range(w.partitionSpec().size())
@@ -167,7 +132,9 @@ def iter_sensitive_specs(df):
         ]
         fns: list[str] = []
         for i in range(w.windowExpressions().size()):
-            for wx in _window_exprs(w.windowExpressions().apply(i), []):
+            for wx in walk(w.windowExpressions().apply(i), subqueries=False):
+                if _simple(wx) != "WindowExpression":
+                    continue
                 label, sensitive = classify_fn(wx)
                 if sensitive:
                     fns.append(label)
@@ -230,32 +197,18 @@ def audit_windows(
     tie-sensitive window specs are NOT total on ``sf_dir``'s fixture
     and are not on the reviewed allowlist.  Empty list == clean.
     ``frames`` shares one query-construction pass across sweeps (see
-    plans.audit.audit_plans)."""
-    from .registry import QUERIES, ordered_queries
+    plans.audit.sweep)."""
 
-    say = report or (lambda _line: None)
-    qs = ordered_queries() if keys is None else {k: QUERIES[k] for k in keys}
-    unexplained: list[tuple[str, str]] = []
-    for key, fn in qs.items():
-        if key.startswith(SKIP_PREFIXES):
-            continue
-        try:
-            df = frames[key] if frames is not None else fn(spark, sf_dir)
-            if isinstance(df, Exception):
-                raise df
-            specs = list(iter_sensitive_specs(df))
-        except Exception as e:  # noqa: BLE001 - audit reports, not dies
-            say(f"ERR   {key}: {type(e).__name__}: {e}")
-            unexplained.append((key, "ERR"))
-            continue
-        if not specs:
-            continue
-        for spec in specs:
+    def check(key: str, df, say: Callable[[str], None]) -> list[str]:
+        flagged = []
+        # list(): a plan-walk error must surface (as one ERR) before any
+        # totality job runs
+        for spec in list(iter_sensitive_specs(df)):
             try:
                 mx, n = check_spec_totality(spark, spec)
             except Exception as e:  # noqa: BLE001
                 say(f"ERR   {key}: {type(e).__name__}: {e}")
-                unexplained.append((key, "ERR"))
+                flagged.append("ERR")
                 continue
             detail = (
                 f"{'/'.join(spec['functions'])} over "
@@ -270,5 +223,7 @@ def audit_windows(
                 )
             else:
                 say(f"FLAG  {key}: max tie group {mx} — {detail}")
-                unexplained.append((key, f"ties(max={mx}): {detail}"))
-    return unexplained
+                flagged.append(f"ties(max={mx}): {detail}")
+        return flagged
+
+    return sweep(spark, sf_dir, check, keys, report, frames)

@@ -5,11 +5,11 @@ collect_list/collect_set sites (partition-arrival array order), and
 fail on any site without a reviewed reason — the r12 companion to
 tools/audit_windows.py, one level down (Aggregate instead of Window).
 
-The policy (site classification, allowlists with reviewed reasons,
-skip prefixes) lives in
-``spark_streaming_kafka_offset_spark.plans.agg_audit`` — the SAME
-module tests/test_plans.py asserts against (the plans/audit.py
-anti-drift lesson, VERDICT r5 #2).
+The policy (site classification, allowlists with reviewed reasons)
+lives in ``spark_streaming_kafka_offset_spark.plans.agg_audit`` and the
+sweep loop and skip prefixes in ``plans.audit`` — the SAME modules
+tests/test_plans.py asserts against (the plans/audit.py anti-drift
+lesson, VERDICT r5 #2).
 
 Usage: python tools/audit_aggregates.py [sf_dir] [key ...]
 Exit code 1 if any non-allowlisted site fires (CI-able).

@@ -4,10 +4,11 @@ LAG / LEAD / NTH_VALUE / order-dependent or bounded-ROWS aggregates) and
 PROVE each such spec's ordering is total on the given fixture — the
 mechanized form of the r11 eval_rbo tie hazard (SURVEY §8).
 
-The policy (sensitivity classification, allowlist, skip prefixes) lives
-in ``spark_streaming_kafka_offset_spark.plans.window_audit`` — the SAME
-module tests/test_plans.py asserts against, so the tool and the CI gate
-cannot drift (the plans/audit.py lesson, VERDICT r5 #2).
+The policy (sensitivity classification, allowlist) lives in
+``spark_streaming_kafka_offset_spark.plans.window_audit`` and the sweep
+loop and skip prefixes in ``plans.audit`` — the SAME modules
+tests/test_plans.py asserts against, so the tool and the CI gate cannot
+drift (the plans/audit.py lesson, VERDICT r5 #2).
 
 Usage: python tools/audit_windows.py [sf_dir] [key ...]
 Exit code 1 if any spec has ties and is not allowlisted (CI-able).
