@@ -57,9 +57,18 @@ def _assert_window_is_stalest(window: list[str], newest: dict[str, int]) -> None
     )
 
 
-def test_ordered_queries_lists_every_key_once():
+def test_priority_covers_registry_exactly():
+    keys = set(ordered_queries())
+    assert keys == set(QUERIES), (
+        f"missing from the driver order: {sorted(set(QUERIES) - keys)}; "
+        f"not registered: {sorted(keys - set(QUERIES))}"
+    )
+
+
+def test_priority_has_no_duplicates():
     keys = list(ordered_queries())
-    assert len(keys) == len(QUERIES) and set(keys) == set(QUERIES)
+    dupes = sorted({k for k in keys if keys.count(k) > 1})
+    assert len(keys) == len(set(keys)), f"repeated in the driver order: {dupes}"
 
 
 def test_first_window_slots_are_all_oracle_backed():
